@@ -24,7 +24,6 @@ object Bench {
     val load0 = loadavg()
     val steal0 = stealTicks()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Route Spark's spill/temp dirs (shuffle blocks, temp streaming
     // checkpoints — java.io.tmpdir is where forceDeleteTempCheckpoint
     // locations are created) to the memory-backed scratch fs when one
@@ -42,36 +41,10 @@ object Bench {
           gib * 1024 * 1024 * 1024)
         .map(_.toString)
     shmWithHeadroom(16).foreach(System.setProperty("java.io.tmpdir", _))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(logLevel = "WARN")
       .config("spark.local.dir", shmWithHeadroom(64).getOrElse(diskTmp))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the session timezone in code (not only via sbt javaOptions)
-      // so date predicates select the same rows under any launcher
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: initialize codegen/JIT, shuffle machinery and the
-    // parquet reader once, so the first timed query measures the query,
-    // not session bring-up (it was absorbing 7-20s of one-time cost).
-    try {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
-        .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
-      // and the streaming stack (state store, offset/commit logs)
-      val schema = spark.read.parquet(s"$sfDir/region.parquet").schema
-      val wq = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "region.parquet").parquet(sfDir)
-        .groupBy(col("r_regionkey")).agg(count(lit(1)))
-        .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      wq.awaitTermination()
-    } catch { case _: Throwable => () }
+    warmup(spark, sfDir)
     // TIMED fixture rows: every SHARED derived artifact (sink files,
     // generations, trained centroids/codebooks, the 2i index, the
     // session-cached derived tables) builds before any query is timed
@@ -82,19 +55,8 @@ object Bench {
     // pipeline cost hides in an untimed prelude. Fixture rows run ONCE
     // (a second run would read the warm cache and time nothing);
     // dependency order means each row times only its own increment.
-    val fixtureBuilds: Seq[(String, (SparkSession, String) => Unit)] =
-      graft.operators.Sink.fixtureBuilds ++
-        graft.operators.SimSearch.fixtureBuilds ++
-        graft.operators.Relational.fixtureBuilds ++
-        // the q15 pair set BEFORE the cluster closure built over it,
-        // so each row times its own increment
-        graft.operators.Dedup.fixtureBuilds ++
-        graft.operators.DedupClusters.fixtureBuilds ++
-        graft.operators.Quality.fixtureBuilds ++
-        graft.operators.Retrieval.fixtureBuilds ++
-        graft.operators.Classifier.fixtureBuilds ++
-        graft.operators.StreamCurate.fixtureBuilds
-    val fixtureResults = fixtureBuilds.map { case (name, fn) =>
+    // (Modules.all lists the fixture modules in that order.)
+    val fixtureResults = Modules.all.flatMap(_.fixtureBuilds).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir); true }
         catch { case e: Throwable =>
@@ -113,10 +75,13 @@ object Bench {
     // between sweeps at local[32] — they get a third run so the min is
     // a steadier floor and round-over-round tails stop showing phantom
     // streaming regressions.
-    // Optional comma-separated name filter for local iteration on one
-    // query's steady-state time; the driver never sets it (full sweep).
+    // Optional comma-separated row-name filter (query or `fixture:*`
+    // names) for local iteration on a few rows; the driver never sets
+    // it (full sweep). Every fixture still builds, in order — later
+    // rows depend on earlier ones — but only the named rows report.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
     // Sweep hygiene: every shared fixture is checkpointed by the warm
     // prelude above, so any persistent RDD that appears DURING a timed
     // query is that query's private localCheckpoint blocks — garbage
@@ -143,7 +108,7 @@ object Bench {
         }
     }
     val queryResults = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .map { case (name, fn) =>
       def once(): (Double, Boolean) = {
         val t0 = System.nanoTime()
@@ -157,11 +122,8 @@ object Bench {
       dropPrivateBlocks()
       name -> (outcomes.map(_._1), outcomes.forall(_._2))
     }
-    // fixture rows are reported only on a full sweep — a filtered
-    // local iteration compares one query's steady state, and 24 rows
-    // of fixture-build noise would drown it
     val results =
-      (if (only.isEmpty) fixtureResults else Seq.empty) ++ queryResults
+      fixtureResults.filter { case (name, _) => wanted(name) } ++ queryResults
     val qs = results.map { case (k, (ts, _)) => s"\"" + k + "\":" + ts.min }
       .mkString("{", ",", "}")
     // raw per-run times alongside the min: a cold first run (plan
@@ -182,4 +144,26 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$raw,"errors":$errs,"load":$load,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Untimed warmup: initialize codegen/JIT, shuffle machinery, the
+    * parquet reader and the streaming stack once, so the first timed
+    * query measures the query, not session bring-up (it was absorbing
+    * 7-20s of one-time cost).
+    */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit =
+    try {
+      import org.apache.spark.sql.functions._
+      spark.read.parquet(s"$sfDir/region.parquet")
+        .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
+        .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
+      // and the streaming stack (state store, offset/commit logs)
+      val schema = spark.read.parquet(s"$sfDir/region.parquet").schema
+      val wq = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "region.parquet").parquet(sfDir)
+        .groupBy(col("r_regionkey")).agg(count(lit(1)))
+        .writeStream.format("memory").queryName("bench_warmup")
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      wq.awaitTermination()
+    } catch { case _: Throwable => () }
 }

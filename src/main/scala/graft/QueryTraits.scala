@@ -22,15 +22,15 @@ package graft
   * shares cannot hide a query's own build work) — and asserts
   * membership ⟺ jobs-ran-at-build in BOTH directions. The prelude
   * (what construction work does NOT count) is the shared-artifact
-  * boundary: testdata schema inference, the trained
-  * centroid/codebook fixtures (`SimSearch.warmFixtures`), and the
-  * derived-table fixtures (`DedupClusters`/`Quality`/`Retrieval`/
-  * `Classifier.warmFixtures` — cluster closure, eval slate, fusion
-  * pools, trained classifier weights) — the
-  * amortized session inputs Bench also warms untimed (warming them
-  * there is REQUIRED: Bench drops private checkpoint blocks after
-  * each timed query, and a shared fixture built lazily during one
-  * would be unpersisted under every later consumer). Editing this
+  * boundary: testdata schema inference and the [[Modules.all]]
+  * fixture builds except Sink's and Relational's (trained
+  * centroids/codebooks, MinHash pairs, cluster closure, eval slate,
+  * fusion pools, trained classifier weights, the ingest loop's side
+  * inputs) — the amortized session inputs Bench also builds before
+  * the query sweep, as its `fixture:*` rows (building them there is
+  * REQUIRED: Bench drops private checkpoint blocks after each timed
+  * query, and a shared fixture built lazily during one would be
+  * unpersisted under every later consumer). Editing this
   * list without measurement fails that spec; so does shipping a new
   * on-build query without listing it.
   */

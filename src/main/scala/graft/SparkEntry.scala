@@ -1,13 +1,14 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-import graft.operators._
+import graft.operators.Core
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` aggregates every operator module's query map; `oracleSql`
   * carries the DuckDB-equivalent SQL for each SQL-expressible query
-  * (queries absent from `oracleSql` get a rows-only check).
+  * (queries absent from `oracleSql` get a rows-only check). Both derive
+  * from [[Modules.all]].
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -21,26 +22,9 @@ object SparkEntry {
     * LLM-data-pipeline extensions (dedup, similarity search, text
     * analysis, event windows). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Core.queries ++ Relational.queries ++ Dedup.queries ++
-      DedupClusters.queries ++ Decontam.queries ++ Sketches.queries ++
-      Retrieval.queries ++ VectorOps.queries ++ AnnPq.queries ++
-      Tokenizer.queries ++ Quality.queries ++
-      TextAnalysis.queries ++ SimSearch.queries ++ Events.queries ++
-      Multimodal.queries ++ Streaming.queries ++ Sink.queries ++
-      SinkMaintain.queries ++ Releases.queries ++ StreamCurate.queries ++
-      Curation.queries ++ Compaction.queries ++ Layout.queries ++
-      Tombstones.queries ++ Classifier.queries ++ Quarantine.queries
+    Modules.all.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Core.oracle ++ Relational.oracle ++ Dedup.oracle ++
-      DedupClusters.oracle ++ Decontam.oracle ++ Sketches.oracle ++
-      Retrieval.oracle ++ VectorOps.oracle ++ AnnPq.oracle ++
-      Tokenizer.oracle ++ Quality.oracle ++
-      TextAnalysis.oracle ++ SimSearch.oracle ++ Events.oracle ++
-      Multimodal.oracle ++ Streaming.oracle ++ Sink.oracle ++
-      SinkMaintain.oracle ++ Releases.oracle ++ StreamCurate.oracle ++
-      Curation.oracle ++ Compaction.oracle ++ Layout.oracle ++
-      Tombstones.oracle ++ Classifier.oracle ++ Quarantine.oracle
+  def oracleSql: Map[String, String] = Modules.all.flatMap(_.oracle).toMap
 }

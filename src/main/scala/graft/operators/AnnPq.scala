@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
 import graft.operators.Checkpoints._
-import graft.sources.Tables
 
 /** PRODUCT-QUANTIZATION ANN — the memory-scale path of the ANN
   * ladder: per-subspace codebooks with ADC scoring (q78) and IVF-PQ
@@ -15,7 +14,7 @@ import graft.sources.Tables
   * re-rank kernel stay there and are imported; this module owns the
   * subvector split, codebook training, and the ADC shortlists.
   */
-object AnnPq {
+object AnnPq extends graft.Module {
   private val PqM = 4 // subspaces (64 dims → 4 × 16)
 
   private val PqDs = 16 // dims per subspace

@@ -62,7 +62,7 @@ import graft.sources.Tables
   * extends the pipeline the same way q228/q59 do, per the build's
   * training-data-pipeline mandate.
   */
-object Classifier {
+object Classifier extends graft.Module {
 
   /** Fixed perceptron rounds — enough to separate the rule-labeled
     * halves at every test sf; fixed (not converged) so the oracle's
@@ -179,13 +179,10 @@ object Classifier {
     * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
     * is required, not optional).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:classifier_train" ->
       ((s: SparkSession, d: String) => { trainedWeightsCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   /** Audit hook (see [[SimSearch.fixturePlans]]): the un-cached
     * training chain for SCALE.md's `fixture:*` rows — per-round

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * to run: no window over whole partitions, no sort, bounded state per
   * (key, name) group.
   */
-object Compaction {
+object Compaction extends graft.Module {
 
   private val HourUs = 3600000000L // writeTime is µs
 

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * stage is the per-key nest / global agg, which shuffles on the same
   * key the storage sorts by.
   */
-object Core {
+object Core extends graft.Module {
 
   /** O1+O9: scan + projection + pushed filter on lineitem. The filter
     * and the 4-column read schema both reach the parquet scan (verified

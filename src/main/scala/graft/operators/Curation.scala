@@ -25,7 +25,7 @@ import graft.sources.Tables
   * All metric math follows the repo's oracle discipline: exact integer
   * counts, one final double division, md5-prefix hashes.
   */
-object Curation {
+object Curation extends graft.Module {
 
   /** Deny-listed terms. Stand-ins for the PII/secret classes a real
     * scrubber matches by regex; list chosen to be non-vacuous on the

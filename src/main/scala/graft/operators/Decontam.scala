@@ -16,7 +16,7 @@ import graft.sources.Tables
   * (`Curation.splitBucketSql`) without adding corpus-shaped work of
   * their own — every composition is pair- or bucket-grain.
   */
-object Decontam {
+object Decontam extends graft.Module {
   /** q96: SPLIT LEAKAGE AUDIT — assign every document a deterministic
     * content-hash train/val/test split (800/100/100 of 1000 buckets on
     * `hash60(text)` — exact duplicates land in the SAME split by

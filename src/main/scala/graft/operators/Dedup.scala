@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
-import graft.functions.Portable
 import graft.functions.Portable._
 import graft.operators.Checkpoints._
 import graft.sources.Tables
@@ -26,7 +25,7 @@ import graft.sources.Tables
   * approximation choices (bands, thresholds) cannot drift between the
   * engine and the check.
   */
-object Dedup {
+object Dedup extends graft.Module {
 
   /** q14: exact content dedup — group by content hash, keep the lowest
     * doc_id as canonical. One shuffle on the 128-bit hash; at 100 TB
@@ -172,14 +171,10 @@ object Dedup {
       dir: String): Seq[(String, DataFrame)] =
     Seq("fixture:minhash_pairs" -> dedupMinhash(spark, dir))
 
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:minhash_pairs" ->
       ((s: SparkSession, d: String) => { minhashPairsCached(s, d); () }))
-
-  /** Bench prelude hook (see [[DedupClusters.warmFixtures]]). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     // the signature table feeds 4 plan branches (band self-join + both

@@ -19,7 +19,7 @@ import graft.sources.Tables
   * it. Oracles splice `Dedup`'s fragments verbatim (the shared
   * `closureCte` is the q54 recursive-CTE discipline).
   */
-object DedupClusters {
+object DedupClusters extends graft.Module {
   /** q54: duplicate CLUSTERS — connected components over the q15
     * MinHash near-dup pairs, the step a real dedup pipeline runs after
     * pair generation (pairs alone under-delete: near-dup similarity is
@@ -126,13 +126,10 @@ object DedupClusters {
     * one looks private (its blocks would be dropped under every later
     * consumer).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:dup_clusters" ->
       ((s: SparkSession, d: String) => { dupClustersCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   private[graft] def dupClustersCached(spark: SparkSession,
       dir: String): DataFrame =

@@ -16,7 +16,7 @@ import graft.sources.Tables
   * DuckDB oracle (`epoch_us(ts)`) matches exactly. `value` doubles are
   * aggregated in integer cents (Relational's discipline).
   */
-object Events {
+object Events extends graft.Module {
 
   private val DayUs = 86400000000L // µs per day
   private[graft] val SessionGapUs = 43200000000L // 12 h — calibrated to the

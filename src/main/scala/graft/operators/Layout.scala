@@ -22,7 +22,7 @@ import graft.sources.Tables
   * in-plan max for the shard width, and one hash aggregation for the
   * per-shard boxes.
   */
-object Layout {
+object Layout extends graft.Module {
 
   /** Bits taken from each dimension — 16+16 interleave to a 32-bit
     * Morton code. Dimensions are masked to [[ZBits]] low bits first

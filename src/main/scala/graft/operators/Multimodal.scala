@@ -40,7 +40,7 @@ case class ResizedMedia(doc_id: Long, new_w: Int, new_h: Int,
   * batch-amortised — at 100 TB the decoder initialises once per task,
   * not once per record, which is the whole point of the batched shape.
   */
-object Multimodal {
+object Multimodal extends graft.Module {
 
   /** documents → media records: binary payload + metadata columns. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRec] = {

@@ -10,7 +10,7 @@ import graft.functions.Portable.withScalar
   * (q22/q94/q216): the analyses that place each document RELATIVE to
   * the corpus — CCNet's perplexity terciles and n-gram novelty.
   */
-object Quality {
+object Quality extends graft.Module {
 
   /** q224: CCNET HEAD/MIDDLE/TAIL BUCKETS — the split the q94
     * surprisal score exists to feed (CCNet buckets a crawl by LM
@@ -670,7 +670,7 @@ object Quality {
     * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
     * is required, not optional).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:ccnet_buckets" ->
       ((s: SparkSession, d: String) => { ccnetBucketsCached(s, d); () }),
@@ -678,9 +678,6 @@ object Quality {
       ((s: SparkSession, d: String) => { evalSlateCached(s, d); () }),
     "fixture:ngram_tables" ->
       ((s: SparkSession, d: String) => { ngramTablesCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   private[graft] def evalSlateCached(spark: SparkSession,
       dir: String): DataFrame =

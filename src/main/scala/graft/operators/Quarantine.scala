@@ -45,7 +45,7 @@ import graft.sources.{GenManifest, ProtoZstFiles}
   * multimodal batch decode: the unit of work is an opaque byte
   * stream, not a row.
   */
-object Quarantine {
+object Quarantine extends graft.Module {
 
   /** Decode as much of one file as parses: (rows, cols, offset in the
     * DECODED stream after the last complete frame, suspect). Never

@@ -17,7 +17,7 @@ import graft.sources.Tables
   * match bit-for-bit regardless of summation order. Floating-point sums of
   * doubles are never compared directly.
   */
-object Relational {
+object Relational extends graft.Module {
 
   private def cents(c: Column): Column = round(c * 100, 0).cast("long")
   private def bps(c: Column): Column = round(c * 10000, 0).cast("long")
@@ -273,15 +273,12 @@ object Relational {
   /** Named fixture builds for the bench's timed `fixture:*` rows
     * (see [[Sink.fixtureBuilds]]).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:bucketed_tables" ->
       ((s: SparkSession, d: String) => { bucketedFixture(s, d); () }),
     "fixture:copurchase_edges" ->
       ((s: SparkSession, d: String) => { coPurchaseFixture(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   private def bucketedFixture(spark: SparkSession,
       dir: String): (String, String) =

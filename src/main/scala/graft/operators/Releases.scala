@@ -12,7 +12,7 @@ import graft.sources.Tables
   * consumes the manifest's version history as the release ledger;
   * file-rewriting maintenance lives in `SinkMaintain`.
   */
-object Releases {
+object Releases extends graft.Module {
   // Release-shape DEFAULTS, sized for the toy corpus: at 100 TB the
   // caller passes epochs/shards matched to the cluster (shard count ≈
   // loader parallelism) — both are operator ARGUMENTS below, and the

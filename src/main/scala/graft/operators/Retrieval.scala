@@ -20,7 +20,7 @@ import graft.sources.Tables
   * (`1000000 DIV (60 + rank)` micro-units), so the DuckDB oracle
   * replays the full hybrid bit-for-bit.
   */
-object Retrieval {
+object Retrieval extends graft.Module {
   private val HybridNQ = 8 // query documents: doc_id < HybridNQ (≡ q19's vec_id query set)
   private val RrfPool = 10 // per-ranker pool depth fed to the fusion
   private val RrfKC = 60 // the standard RRF damping constant
@@ -133,13 +133,10 @@ object Retrieval {
     * (see [[DedupClusters.fixtureBuilds]] for why pre-sweep building
     * is required, not optional).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:hybrid_rrf" ->
       ((s: SparkSession, d: String) => { hybridRrfCached(s, d); () }))
-
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   private[graft] def hybridRrfCached(spark: SparkSession,
       dir: String): DataFrame =

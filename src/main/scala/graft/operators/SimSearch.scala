@@ -19,7 +19,7 @@ import graft.sources.Tables
   * the exact milli-quantised integer dot/norms from
   * [[graft.functions.Portable]] so the DuckDB oracle matches exactly.
   */
-object SimSearch {
+object SimSearch extends graft.Module {
 
   private[operators] val K = 3 // neighbours returned per query
   private[operators] val NQ = 8 // query vectors: vec_id < NQ
@@ -281,7 +281,7 @@ object SimSearch {
     * IVF-PQ residual codebooks), named for the bench's timed
     * `fixture:*` rows (see [[Sink.fixtureBuilds]]).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:centroids_k8" ->
       ((s: SparkSession, d: String) => { centroidFixture(s, d, KmK); () }),
@@ -290,10 +290,6 @@ object SimSearch {
     // builds the NCells (k=16) centroids too
     "fixture:ivfpq_residual_books" ->
       ((s: SparkSession, d: String) => { AnnPq.ivfPqBooks(s, d); () }))
-
-  /** Build every shared trained artifact eagerly (test preludes). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   /** Seeds + exactly `rounds` Lloyd rounds — the unroll at a given
     * depth (spec hook for proving loop ≡ unroll). */

@@ -59,7 +59,7 @@ private[graft] object Scratch {
   * would serialise the whole cluster through one writer at 100 TB).
   * zstd via zstd-jni, which ships with the Spark runtime.
   */
-object Sink {
+object Sink extends graft.Module {
 
   /** Write each partition of framed messages as one .proto.zst file.
     * The low-level fallback path (pre-encoded bytes in, foreachPartition
@@ -703,7 +703,7 @@ object Sink {
     * row's time covers exactly its own increment — dependencies
     * already cached by earlier rows).
     */
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:sink_nested" ->
       ((s: SparkSession, d: String) => { nestedFixture(s, d); () }),
@@ -727,10 +727,6 @@ object Sink {
       ((s: SparkSession, d: String) => { Releases.exportFixture(s, d); () }),
     "fixture:index_2i" ->
       ((s: SparkSession, d: String) => { Core.indexFixture(s, d); () }))
-
-  /** Build every shared on-disk fixture eagerly (test preludes). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   /** q109 fixture: the documents table written as two parquet
     * "generations" with EVOLVED schemas under one root — gen=1 holds

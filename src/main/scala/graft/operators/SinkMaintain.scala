@@ -5,8 +5,6 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** MANIFEST-LIFECYCLE MAINTENANCE for the proto-zst sink — the
   * operations that rewrite or retire committed files behind ONE atomic
   * manifest commit each: small-file OPTIMIZE (q77), unreferenced-file
@@ -36,7 +34,7 @@ private[graft] object MaintainHooks {
   }
 }
 
-object SinkMaintain {
+object SinkMaintain extends graft.Module {
 
   /** The engine's complete staging-name vocabulary — every maintenance
     * op that stages under the table directory does so under exactly

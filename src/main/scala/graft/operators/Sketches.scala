@@ -14,7 +14,7 @@ import graft.sources.Tables
   * of the hash gate), the production path for distinct counts a 100 TB
   * corpus cannot count exactly per night.
   */
-object Sketches {
+object Sketches extends graft.Module {
   private val SketchLgK = 12 // HLL registers: rsd ≈ 1.04/√2^12 ≈ 1.6%
 
   private val SketchBoundMilli = 100L // accepted |est−exact| ≤ 10%

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * runs over the documents corpus and shares `curationGates` between
   * the stream, the batch twin, and the DuckDB oracles.
   */
-object StreamCurate {
+object StreamCurate extends graft.Module {
   /** q208 export-key shape: 2-digit shard field, "lXX-sYY" prefix the
     * sink splits files on, and the synthetic ingest epoch (µs) the
     * watermark clock hangs off. */
@@ -116,8 +116,8 @@ object StreamCurate {
     * re-measurement of an amortized artifact (2 jobs + 2 collects per
     * run × 4 queries). Keyed by (applicationId, dir): a fresh JVM
     * always recomputes from the parquet inputs; nothing survives the
-    * session. [[warmFixtures]] builds both in Bench's untimed prelude
-    * so no timed query absorbs the first build.
+    * session. [[fixtureBuilds]] builds both as Bench's timed
+    * `fixture:*` rows so no timed query absorbs the first build.
     */
   private val invLock = new Object
   private val boilerFixtures = scala.collection.concurrent.TrieMap
@@ -141,16 +141,12 @@ object StreamCurate {
     rateFixtures.getOrElseUpdate((app, dir), mixtureRates(spark, dir))
   }
 
-  private[graft] val fixtureBuilds:
+  override private[graft] val fixtureBuilds:
       Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "fixture:boiler_inventory" ->
       ((s: SparkSession, d: String) => { boilerInventoryCached(s, d); () }),
     "fixture:mixture_rates" ->
       ((s: SparkSession, d: String) => { mixtureRatesCached(s, d); () }))
-
-  /** Bench prelude hook (see [[DedupClusters.warmFixtures]]). */
-  def warmFixtures(spark: SparkSession, dir: String): Unit =
-    fixtureBuilds.foreach(_._2(spark, dir))
 
   /** q208: THE STREAMING CURATION INGEST LOOP — the production shape a
     * continuous 100 TB corpus build runs, composed as ONE streaming
@@ -213,13 +209,11 @@ object StreamCurate {
     // fan-out plus the proto-zst sink's per-partition file handling,
     // and its md5 gate ladder parallelizes BEFORE the state exchange
     // (the spread above), so halving the store count wins. Interleaved
-    // A/B (graft.tools.ABStateParts, arms alternating inside one
-    // session so contention waves hit both): parts=4 median 2.78 s vs
-    // parts=8 median 3.65 s, 4 faster in 5 of 5 paired rounds; state
-    // rows/updates/drops identical. The sys-prop hook stays for future
-    // re-measurement.
-    Streaming.withStatePartitions(spark,
-      sys.props.get("graft.q208.parts").map(_.toInt).getOrElse(4)) {
+    // A/B (arms alternating inside one session so contention waves
+    // hit both): parts=4 median 2.78 s vs parts=8 median 3.65 s, 4
+    // faster in 5 of 5 paired rounds; state rows/updates/drops
+    // identical.
+    Streaming.withStatePartitions(spark, 4) {
       val q = gated
         .select(
           encode(format_string("l%s-s%02d:%s", col("lang"), col("shard"),

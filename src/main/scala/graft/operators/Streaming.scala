@@ -24,7 +24,7 @@ case class FunnelOut(user_id: Long, view_us: Option[Long],
 /** q98 records: per-user online feature accumulator and its emitted
   * row (top-level for encoders).
   */
-object Streaming extends Serializable {
+object Streaming extends graft.Module with Serializable {
 
   /** Run `f` with the RocksDB state-store provider (the
     * transformWithState engine requirement), restoring the session

@@ -17,7 +17,7 @@ import graft.sources.Tables
   * final double division of exact integers, so the DuckDB oracle
   * hash-matches bit-for-bit.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.Module {
 
   /** Per-language signature words (chosen from the corpus' per-language
     * frequency skew — each language's documents over-sample its three

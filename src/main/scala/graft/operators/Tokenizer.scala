@@ -11,7 +11,7 @@ import graft.sources.Tables
   * merge table. Split out of `TextAnalysis` (which stays the consumer
   * side: encode, counts, fertility).
   */
-object Tokenizer {
+object Tokenizer extends graft.Module {
 
   /** q221: BPE MERGE-ABLATION CURVE — the realized marginal value of
     * every merge rule over this corpus: for each rank-r merge, the

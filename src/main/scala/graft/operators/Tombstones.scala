@@ -1,6 +1,6 @@
 package graft.operators
 
-import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
+import com.github.luben.zstd.ZstdOutputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +39,7 @@ import graft.sources.{BloomSidecar, GenManifest, ProtoZstFiles, RangeSidecar, Sp
   * q148; [[Releases.packErase]], q213) remains for callers who need
   * bytes gone in the same call.
   */
-object Tombstones {
+object Tombstones extends graft.Module {
 
   private def hex(b: Array[Byte]): String =
     b.map(x => "%02x".format(x & 0xff)).mkString

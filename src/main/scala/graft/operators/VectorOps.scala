@@ -18,7 +18,7 @@ import graft.sources.Tables
   * feature projection and oracle base CTE stay there
   * (`SimSearch.base` / `SimSearch.baseSql`).
   */
-object VectorOps {
+object VectorOps extends graft.Module {
   private val CoresetK = 10 // representatives kept per label
 
   /** q159: LABEL-BALANCED CORESET — per class, the [[CoresetK]]

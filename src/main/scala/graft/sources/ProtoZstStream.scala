@@ -1,24 +1,7 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, File, FileInputStream, FileOutputStream}
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
-
-import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-import graft.functions.ProtoWire
 
 /** The proto-zst MICRO-BATCH STREAM: positional file offsets over the
   * manifest (or listing) order, parquet-file-source-parity admission

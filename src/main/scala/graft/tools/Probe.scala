@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Per-query cost decomposition at bench conditions:
@@ -7,35 +6,16 @@ import org.apache.spark.scheduler._
   * into frame-build / analyze+optimize+physical-plan / execute wall
   * time, and counts jobs/stages/tasks + per-stage task time so plan
   * overhead (scheduling many tiny stages) is distinguishable from
-  * genuine compute. Uses the SAME session shape as Bench (local[32],
-  * shuffle.partitions=32, extensions) so numbers transfer.
+  * genuine compute. Uses Bench's session recipe, warmup and fixture
+  * builds so numbers transfer.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // bench-identical warmup
-    import org.apache.spark.sql.functions._
-    spark.read.parquet(s"$dir/region.parquet")
-      .withColumn("h", graft.functions.HashOps.md5_prefix60(col("r_name")))
-      .groupBy(col("r_regionkey")).agg(count(lit(1))).count()
-    try {
-      graft.operators.Sink.warmFixtures(spark, dir)
-      graft.operators.SimSearch.warmFixtures(spark, dir)
-      graft.operators.Relational.warmFixtures(spark, dir)
-      graft.operators.DedupClusters.warmFixtures(spark, dir)
-      graft.operators.Quality.warmFixtures(spark, dir)
-      graft.operators.Retrieval.warmFixtures(spark, dir)
-      graft.operators.Classifier.warmFixtures(spark, dir)
-    } catch { case e: Throwable =>
+    val spark = graft.GraftSession.builder().getOrCreate()
+    graft.Bench.warmup(spark, dir)
+    try graft.Modules.all.flatMap(_.fixtureBuilds).foreach(_._2(spark, dir))
+    catch { case e: Throwable =>
       System.err.println(s"[probe] fixture warm failed: ${e.getMessage}") }
 
     @volatile var jobs = 0

@@ -1,12 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.builder().getOrCreate()
     val df = graft.SparkEntry.entry(spark)
     println("ENTRY-ROWS: " + df.count())
     df.show(3, false)

@@ -93,9 +93,28 @@ class CellModelSpec extends AnyFunSuite {
   }
 
   test("queries and oracleSql keys line up") {
+    // no query name defined by two modules (merging the maps would
+    // silently keep one of them)
+    val names = Modules.all.flatMap(_.queries.keys)
+    val dupes = names.diff(names.distinct)
+    assert(dupes.isEmpty, s"query names defined twice: $dupes")
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle-only keys: ${o.diff(q)}")
+    // the bench's fixture:* rows, in build (dependency) order
+    assert(Modules.all.flatMap(_.fixtureBuilds.map(_._1)) === Seq(
+      "fixture:sink_nested", "fixture:sink_ranged",
+      "fixture:sink_generations", "fixture:sink_optimized",
+      "fixture:sink_reexport", "fixture:sink_vacuumed",
+      "fixture:sink_evolved", "fixture:sink_layout",
+      "fixture:release_export", "fixture:index_2i",
+      "fixture:centroids_k8", "fixture:pq_codebooks",
+      "fixture:ivfpq_residual_books",
+      "fixture:bucketed_tables", "fixture:copurchase_edges",
+      "fixture:minhash_pairs", "fixture:dup_clusters",
+      "fixture:ccnet_buckets", "fixture:eval_slate", "fixture:ngram_tables",
+      "fixture:hybrid_rrf", "fixture:classifier_train",
+      "fixture:boiler_inventory", "fixture:mixture_rates"))
   }
 
   test("q182 tombstone audit matches a local replay of counts and verdicts") {

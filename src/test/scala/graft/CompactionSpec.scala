@@ -128,7 +128,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("q233 LCS promotion: one commit per level, disjoint sorted runs, bit-equal reads, idempotent") {
-    import graft.operators.{SinkMaintain, Sink}
+    import graft.operators.SinkMaintain
     import graft.sources.{GenManifest, ProtoZstFiles}
     val conf = ProtoZstFiles.hadoopConf()
     // a PRIVATE two-level fixture (promotion mutates it)
@@ -261,7 +261,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("q233 bounded-batch promotion drains the backlog and converges to the one-shot result") {
-    import graft.operators.{SinkMaintain, Sink}
+    import graft.operators.SinkMaintain
     import graft.sources.{GenManifest, ProtoZstFiles}
     val conf = ProtoZstFiles.hadoopConf()
     // two private fixtures from the same corpus: one drains in

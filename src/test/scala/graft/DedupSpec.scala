@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Portable
-import graft.operators.{Decontam, Dedup, DedupClusters, Sketches}
+import graft.operators.{Decontam, Dedup, DedupClusters}
 
 /** Semantic checks for the dedup operators against brute-force ground
   * truth on sf0.001 (small enough for all-pairs).

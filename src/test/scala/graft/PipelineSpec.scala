@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AnnPq, CellModel, DedupClusters, Events, Multimodal, Relational, SimSearch, Sink, SinkMaintain, StreamCurate, Streaming, VectorOps}
+import graft.operators.{AnnPq, CellModel, Events, Multimodal, Relational, SimSearch, Sink, SinkMaintain, StreamCurate, Streaming, VectorOps}
 import graft.sources.Tables
 
 /** Cross-operator semantic invariants on sf0.001: conservation laws,
@@ -866,7 +866,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("q211 sweep quarantines exactly the near-dup partner hashes") {
-    import graft.operators.{Dedup, Streaming}
+    import graft.operators.Dedup
     val rows = StreamCurate.ingestSweep(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getInt(6)))
     val nearH = Dedup.dedupMinhash(spark, sf0001)
@@ -1388,7 +1388,6 @@ class PipelineSpec extends AnyFunSuite {
     // join's initial state-cleanup cutoffs and emit nothing (see
     // outerAttributionOf scaladoc)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
     val hourUs = 3600000000L
     val base = 1700000000000000L
     val vIn = MemoryStream[(Long, Long, Long)](
@@ -1522,7 +1521,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q107 append-mode windows finalize at window_end == watermark (pins <=)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
     val hourUs = 3600000000L
     val dayUs = 86400000000L
     val b = 1700006400000000L // a day boundary (19675 * 86400 s)
@@ -1688,7 +1686,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q141 runs TWO stateful window aggregates in one query, both bounded") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
     val hourUs = 3600000000L
     val dayUs = 86400000000L
     val b = 1700006400000000L // a day boundary
@@ -1730,7 +1727,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q162 join+window chain: TWO stateful ops, finalized hours only") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
     val hourUs = 3600000000L
     val b = 1700006400000000L // an hour boundary
     // (user_id, view_id, view_us) / (p_user, purchase_id, purchase_us)
@@ -1764,7 +1760,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("q163 sketch fold: batch-split invariant and replay-idempotent") {
-    import spark.implicits._
     val ev = graft.sources.Tables.events(spark, sf0001)
       .select(col("event_type"), col("user_id"))
     def estimates(target: String): Map[String, Long] =

@@ -341,7 +341,7 @@ class PlanSpec extends AnyFunSuite {
     * handful of mega-partition sorts.
     */
   test("q159/q167 plan no rank window; top-k partial-aggregates before the shuffle") {
-    import graft.operators.{SimSearch, VectorOps}
+    import graft.operators.VectorOps
     Seq("q159" -> VectorOps.labelCoreset(spark, sf0001),
       "q167" -> VectorOps.negSample(spark, sf0001)).foreach { case (n, df) =>
       val plan = physical(df)
@@ -353,7 +353,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q159/q167 bounded-heap selection is bit-identical to the rank-window form") {
-    import graft.operators.{SimSearch, VectorOps}
+    import graft.operators.VectorOps
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val cols = df.columns.sorted.toSeq
       df.select(cols.map(org.apache.spark.sql.functions.col): _*)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CellModel, Releases, Sink, SinkMaintain}
+import graft.operators.{CellModel, Sink, SinkMaintain}
 
 /** The proto-zst DSv2 source and the SQL-function extension surface. */
 class SourceExtensionSpec extends AnyFunSuite {

@@ -2,20 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks a single test JVM). */
+/** One shared local session for all suites (sbt forks a single test JVM).
+  * Four cores whatever the machine, so specs see the same partition
+  * counts everywhere.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.builder(cpus = 4).getOrCreate()
   val sf0001 = "/root/testdata/sf0.001"
   /** Same 500-document corpus size, different content — the dir for
     * specs whose subject only manifests there (the trained classifier
